@@ -134,10 +134,18 @@ def train_hmm(sentences: DataFrame, max_model_rows: int = 50_000_000) -> HMMMode
     with a global sentence order, i.e. a single ``doc_id`` (matching the
     reference's single-file training). Multi-doc corpora are supported but
     order is (doc_id, sent_id, pos) lexicographic.
+
+    Malformed rows -- a tag count that differs from the token count, e.g.
+    tokens with an empty tag list -- are dropped instead of failing the
+    whole job on an out-of-range tag lookup.
     """
     from .partitioning import fan_out
 
-    sentences = fan_out(sentences.where(F.size("tokens") > 0))
+    sentences = fan_out(
+        sentences.where(
+            (F.size("tokens") > 0) & (F.size("tags") == F.size("tokens"))
+        )
+    )
     order_cols = (
         [F.col("doc_id"), F.col("sent_id")]
         if "doc_id" in sentences.columns

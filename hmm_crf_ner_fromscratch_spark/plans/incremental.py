@@ -209,43 +209,31 @@ class IncrementalKGPipeline:
         os.replace(tmp, path)
         return gen
 
-    def _plan_delta(self, changed, removed, prev, tx_snap):
-        """(assignment, affected): target partition per changed conv --
-        existing convs rewrite in place, new convs go to this ingest's
-        generation partition -- plus the partitions a commit touches."""
-        ch = changed.join(
-            prev.select("conv_id", F.col(BUCKET_COL).alias("_old")),
-            "conv_id",
-            "left",
-        ).persist()
-        n_new = ch.where(F.col("_old").isNull()).count()
-        gen = self._alloc_generation(tx_snap) if n_new else None
-        assign = ch.select(
+    def _plan_delta(self, changed, removed, tx_snap):
+        """Plan a delta commit. ``changed`` / ``removed`` hold
+        (conv_id, _old): each conversation's recorded partition, null for
+        a new one. Returns (assignment, affected, n_changed): the target
+        partition per changed conv -- existing convs rewrite in place, new
+        convs go to this ingest's generation partition -- plus the
+        partitions a commit touches and the number of changed convs."""
+        # one action answers every planning question: which existing
+        # partitions hold changed convs, is any of them new, how many
+        plan = changed.agg(
+            F.collect_set("_old").alias("old_b"),
+            F.bool_or(F.col("_old").isNull()).alias("any_new"),
+            F.count(F.lit(1)).alias("n"),
+        ).first()
+        gen = self._alloc_generation(tx_snap) if plan.any_new else None
+        assign = changed.select(
             "conv_id",
             F.coalesce("_old", F.lit(gen)).cast("int").alias(BUCKET_COL),
         ).persist()
-        assign.count()
-        old_b = {
-            int(r._old)
-            for r in ch.select("_old").where(F.col("_old").isNotNull())
-            .distinct()
-            .collect()
-        }
-        ch.unpersist()
-        rm_b = set()
+        touched = set(plan.old_b)
         if removed is not None:
-            rm_b = {
-                int(r.b)
-                for r in removed.join(
-                    prev.select("conv_id", F.col(BUCKET_COL).alias("b")),
-                    "conv_id",
-                )
-                .select("b")
-                .distinct()
-                .collect()
-            }
-        affected = sorted(old_b | rm_b | ({gen} if gen is not None else set()))
-        return assign, affected
+            touched |= set(removed.agg(F.collect_set("_old")).first()[0])
+        if gen is not None:
+            touched.add(gen)
+        return assign, sorted(int(b) for b in touched), int(plan.n)
 
     def _decode(self, turns: DataFrame) -> DataFrame:
         salted = salted_turns(tokenize_turns(turns), bucket=self.salt_bucket)
@@ -418,17 +406,19 @@ class IncrementalKGPipeline:
             return self.run(delta_tx)
 
         digests_delta = conv_digests(delta_tx).persist()
-        # ignore no-op re-deliveries (same conv content re-sent)
-        changed = (
+        # ignore no-op re-deliveries (same conv content re-sent); a
+        # changed conv keeps the partition it was recorded in (_old)
+        changed_old = (
             digests_delta.alias("d")
             .join(prev.alias("p"), "conv_id", "left")
             .where(
                 F.col("p.digest").isNull()
                 | (F.col("d.digest") != F.col("p.digest"))
             )
-            .select("conv_id")
+            .select("conv_id", F.col(f"p.{BUCKET_COL}").alias("_old"))
             .persist()
         )
+        changed = changed_old.select("conv_id")
         merged_digests = (
             prev.select("conv_id", "digest", "n_turns")
             .join(digests_delta.select("conv_id"), "conv_id", "left_anti")
@@ -443,7 +433,7 @@ class IncrementalKGPipeline:
             F.bit_xor("digest").alias("h"), F.sum("n_turns").alias("n")
         ).first()
         tx_snap = f"tx:{row.h}:{row.n}"
-        assign, affected = self._plan_delta(changed, None, prev, tx_snap)
+        assign, affected, n_changed = self._plan_delta(changed_old, None, tx_snap)
 
         def commit_digests():
             # delta-scoped state update: only the partitions owning changed
@@ -490,9 +480,10 @@ class IncrementalKGPipeline:
             affected,
             commit_digests,
             tx_snap,
+            n_changed,
         )
         digests_delta.unpersist()
-        changed.unpersist()
+        changed_old.unpersist()
         assign.unpersist()
         # default-on state bounding: fold accumulated generation
         # partitions back into the hash buckets once they reach the
@@ -542,12 +533,17 @@ class IncrementalKGPipeline:
         joined = digests_new.alias("n").join(
             prev.alias("p"), "conv_id", "full_outer"
         )
-        changed = joined.where(
+        old = F.col(f"p.{BUCKET_COL}").alias("_old")
+        changed_old = joined.where(
             F.col("p.digest").isNull()
             | (F.col("n.digest") != F.col("p.digest"))
-        ).select("conv_id").persist()
-        removed = joined.where(F.col("n.digest").isNull()).select("conv_id")
-        assign, affected = self._plan_delta(changed, removed, prev, tx_snap)
+        ).select("conv_id", old).persist()
+        changed = changed_old.select("conv_id")
+        removed_old = joined.where(F.col("n.digest").isNull()).select("conv_id", old)
+        removed = removed_old.select("conv_id")
+        assign, affected, n_changed = self._plan_delta(
+            changed_old, removed_old, tx_snap
+        )
 
         def commit_digests():
             # unchanged convs keep their recorded partition; changed convs
@@ -582,8 +578,9 @@ class IncrementalKGPipeline:
             affected,
             commit_digests,
             tx_snap,
+            n_changed,
         )
-        changed.unpersist()
+        changed_old.unpersist()
         assign.unpersist()
         return res
 
@@ -596,6 +593,7 @@ class IncrementalKGPipeline:
         affected: list | None,
         commit_digests,
         tx_snap: str,
+        n_changed: int = 0,
     ) -> IncrementalResult:
         io = self.io
         labeler = "labeler:" + _model_fingerprint(self.model)
@@ -608,7 +606,7 @@ class IncrementalKGPipeline:
             affected_convs = (
                 changed.unionByName(removed) if removed is not None else changed
             ).persist()
-            res.n_changed = changed.count()
+            res.n_changed = n_changed
             res.n_removed = removed.count() if removed is not None else 0
             res.affected_buckets = list(affected)
 
@@ -620,6 +618,14 @@ class IncrementalKGPipeline:
                 return self._with_bucket(df)
             return df.join(assign, "conv_id")
 
+        def one_file_per_bucket(df: DataFrame) -> DataFrame:
+            # every row of a bucket in one shuffle partition: each commit
+            # writes one file per bucket it touches, so a later read of a
+            # bucket is one task instead of one per upstream partition
+            # (read amplification otherwise grows per ingest). AQE packs
+            # the buckets of a small delta into a single task.
+            return df.repartition(F.col(BUCKET_COL))
+
         def merged(stage: str, delta_df: DataFrame) -> DataFrame:
             """delta rows + retained rows of the affected partitions, i.e.
             the complete new content of exactly those partitions. A pure
@@ -630,16 +636,14 @@ class IncrementalKGPipeline:
             cluster: a reliable checkpoint or staging dir)."""
             delta_b = attach_bucket(delta_df)
             if affected is None:
-                return delta_b
+                return one_file_per_bucket(delta_b)
             retained = io.read_buckets(stage, affected).join(
                 affected_convs, "conv_id", "left_anti"
             )
             cols = io.manifest(stage)["columns"] + [BUCKET_COL]
-            return (
-                retained.select(*cols)
-                .unionByName(delta_b.select(*cols))
-                .localCheckpoint(eager=True)
-            )
+            return one_file_per_bucket(
+                retained.select(*cols).unionByName(delta_b.select(*cols))
+            ).localCheckpoint(eager=True)
 
         decoded_delta: dict = {}
 
@@ -736,14 +740,6 @@ class IncrementalKGPipeline:
             compute_triples,
             affected,
         )
-
-        def one_file_per_bucket(df: DataFrame) -> DataFrame:
-            # the maintained state tables (triple counts / candidates /
-            # link pairs) are small relative to the corpus; one shuffle
-            # partition per bucket keeps their file counts flat across
-            # delta commits (read amplification on these hot tables
-            # otherwise grows per ingest)
-            return df.repartition(self.n_buckets, F.col(BUCKET_COL))
 
         # ---- triple-count state: (subj_type, subj, pred, obj_type, obj)
         # -> exact count + capped provenance sample, partitioned by key

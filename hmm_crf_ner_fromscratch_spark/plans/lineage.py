@@ -36,27 +36,52 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-_LINEAGE_SCHEMA = (
-    "stage string, run_id string, file string, rows bigint, "
-    "checksum bigint, snapshot_id string"
+_LINEAGE_FIELDS = (
+    ("stage", "string"),
+    ("run_id", "string"),
+    ("file", "string"),
+    ("rows", "bigint"),
+    ("checksum", "bigint"),
+    ("snapshot_id", "string"),
 )
-_LINEAGE_COLS = ["stage", "run_id", "file", "rows", "checksum", "snapshot_id"]
+_LINEAGE_SCHEMA = ", ".join(f"{name} {kind}" for name, kind in _LINEAGE_FIELDS)
+_LINEAGE_COLS = [name for name, _kind in _LINEAGE_FIELDS]
 
 
-def _write_lineage(spark: SparkSession, lineage_rows: list, path: str) -> None:
-    """One-file lineage-table write. Goes through pandas so the plan is an
-    Arrow LocalTableScan: createDataFrame on a plain Python list builds a
-    pickled RDD with defaultParallelism partitions, and coalesce(1) then
-    makes ONE task drain all of those python-worker partitions
-    sequentially -- measured ~4.3 s per commit for a 13-row table at
-    local[32] vs 0.16 s on the Arrow path."""
-    import pandas as pd
+def _write_lineage(lineage_rows: list, path: str) -> None:
+    """One-file lineage-table write, in-process with pyarrow: the rows are
+    already in local memory (built from the manifest ledger and the
+    parquet footers), so a Spark job -- and its planning -- would only
+    copy them back out. Same layout as a Spark write (a directory holding
+    one parquet file), so ``lineage()`` reads it unchanged. The new file
+    is written to a sibling directory and swapped in."""
+    import shutil
 
-    pdf = pd.DataFrame(lineage_rows, columns=_LINEAGE_COLS)
-    spark.createDataFrame(pdf, schema=_LINEAGE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    arrow_type = {"string": pa.string(), "bigint": pa.int64()}
+    schema = pa.schema([(n, arrow_type[k]) for n, k in _LINEAGE_FIELDS])
+    table = pa.Table.from_pylist(
+        [dict(zip(_LINEAGE_COLS, r)) for r in lineage_rows], schema=schema
+    )
+    tmp = path + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)
+
+
+def _read_lineage(path: str) -> list[tuple]:
+    """Rows of a lineage table written by ``_write_lineage`` (or by an
+    earlier Spark write of the same schema), read in-process."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(path, columns=_LINEAGE_COLS, partitioning=None)
+    return list(zip(*(table.column(c).to_pylist() for c in _LINEAGE_COLS)))
 
 
 def _stable_hash(*parts: str) -> str:
@@ -181,9 +206,7 @@ class ParquetManifestTableIO:
             for path, (n, _size, fp) in zip(files, metas)
         ]
         _write_lineage(
-            self.spark,
-            lineage_rows,
-            os.path.join(self._dir(stage), "_lineage.parquet"),
+            lineage_rows, os.path.join(self._dir(stage), "_lineage.parquet")
         )
 
         manifest = {
@@ -194,6 +217,7 @@ class ParquetManifestTableIO:
             "row_count": total_rows,
             "content_xor": global_xor,
             "columns": cols,
+            "schema": df.schema.json(),
             "n_files": len(lineage_rows),
             "complete": True,
         }
@@ -204,7 +228,14 @@ class ParquetManifestTableIO:
         return snapshot
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._dir(stage), "data"))
+        """The committed stage table. Read with the schema its manifest
+        recorded: no schema-inference job per read, and a stage that
+        committed no rows reads back empty."""
+        m = self.manifest(stage)
+        reader = self.spark.read
+        if m and m.get("schema"):
+            reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+        return reader.parquet(os.path.join(self._dir(stage), "data"))
 
     # -- bucketed commits (incremental ingest) --
     def write_bucketed(
@@ -276,7 +307,7 @@ class ParquetManifestTableIO:
         # per-bucket ledger refresh: scan ONLY the (re)written buckets
         # (partition pruning on the read-back), hash in the recorded
         # column order so delta and full commits agree bit-for-bit
-        out = self.spark.read.parquet(data_dir)
+        out = self.spark.read.schema(df.schema).parquet(data_dir)
         if affected_buckets is not None:
             out = out.where(F.col(bucket_col).isin([int(b) for b in affected_buckets]))
         agg = (
@@ -323,9 +354,9 @@ class ParquetManifestTableIO:
                 for b in affected_buckets
             )
             prev_lineage = {
-                r.file: (r.run_id, int(r.rows), int(r.checksum))
-                for r in self.spark.read.parquet(lineage_path).collect()
-                if not r.file.startswith(rewritten)
+                path: (rid, int(n), int(fp))
+                for _stage, rid, path, n, fp, _snap in _read_lineage(lineage_path)
+                if not path.startswith(rewritten)
             }
         fresh = [p for p in files if p not in prev_lineage]
         with ThreadPoolExecutor(
@@ -341,7 +372,7 @@ class ParquetManifestTableIO:
             for path in files
             for rid, n, fp in [prev_lineage.get(path) or fresh_meta[path]]
         ]
-        _write_lineage(self.spark, lineage_rows, lineage_path)
+        _write_lineage(lineage_rows, lineage_path)
 
         if n_buckets is None:
             inherit = prev if prev is not None else self.manifest(stage)
@@ -354,6 +385,7 @@ class ParquetManifestTableIO:
             "row_count": total_rows,
             "content_xor": global_xor,
             "columns": cols,
+            "schema": df.schema.json(),
             "bucketed": True,
             "bucket_col": bucket_col,
             "n_buckets": n_buckets,

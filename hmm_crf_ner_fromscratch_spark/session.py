@@ -54,6 +54,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce persisted frames too: otherwise every cached
+        # delta keeps all shuffle partitions and each scan of it is a
+        # shuffle-partitions-wide stage of near-empty tasks
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", DEFAULT_ARROW_BATCH)
         # fork-warm python workers: the daemon preloads pandas/pyarrow/

@@ -487,6 +487,31 @@ def test_train_hmm_model_row_cap(spark):
     assert model.B.shape[0] == 2  # two tags
 
 
+def test_train_hmm_drops_malformed_rows(spark):
+    """A sentence whose tag count differs from its token count (here:
+    tokens with an empty tag list) is dropped, not fatal to training, and
+    the model equals the one trained without it."""
+    from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
+
+    schema = "doc_id string, sent_id long, tokens array<string>, tags array<string>"
+    good = [
+        ("d", 0, ["Alice", "met", "Bob"], ["B-PER", "O", "B-PER"]),
+        ("d", 1, ["Bob", "left"], ["B-PER", "O"]),
+        ("d", 3, ["they", "met", "Alice"], ["O", "O", "B-PER"]),
+    ]
+    bad = [
+        ("d", 2, ["Carol", "called"], []),
+        ("d", 4, ["no", "tags", "here"], ["O"]),
+    ]
+    clean = train_hmm(spark.createDataFrame(good, schema))
+    dirty = train_hmm(spark.createDataFrame(good + bad, schema))
+    assert dirty.word_to_idx == clean.word_to_idx
+    assert dirty.tag_to_idx == clean.tag_to_idx
+    assert dirty.tag_counts == clean.tag_counts
+    for a, b in ((dirty.pi, clean.pi), (dirty.A, clean.A), (dirty.B, clean.B)):
+        assert np.array_equal(a, b)
+
+
 def test_local_df_arrow_paths(spark):
     """session.local_df is load-bearing for every driver-built table
     (lineage, components, relation rules, eval labels, ANN probes): it
